@@ -311,9 +311,10 @@ object RelationalOps {
        WHERE doc_id = 42"""
 
   /** P5 retention split (`storage.py:177-203`): one pass classifying rows
-    * against the age cutoff — `n_purged` is what `DocStore.deleteWhere`
+    * against the age cutoff — `n_purged` is what a retention `deleteWhere`
     * would drop, `n_kept` what survives. The delete op itself lives on the
-    * results store (graft.sources.DocStore.deleteWhere, DocStoreSpec).
+    * results table (graft.jobs.CommitCore.deleteWhere, DocStoreSpec and
+    * FileRetentionSpec).
     */
   def p5Retention(spark: SparkSession, dir: String): DataFrame = {
     val cutoff = lit("2024-01-20 00:00:00").cast("timestamp")

@@ -18,7 +18,8 @@ import graft.parse.{DocParser, SignatureTable}
   *  - skew from giant multi-page PDFs: the default [[Layout.ScanSplits]]
   *    parses on scan splits (`spark.sql.files.maxPartitionBytes` bounds
   *    task size) so the raw corpus is never shuffled; uniform-hash
-  *    [[Layout.ByBucket]] (the writing jobs) and round-robin
+  *    [[Layout.ByBucket]] (the bucket-unit writers: [[run]] and
+  *    [[ResumableExtract]]) and round-robin
   *    [[Layout.RoundRobin]] (adversarially-sorted inputs) are the explicit
   *    salted-repartition escape hatches — a giant doc is one row either
   *    way, so a shuffle cannot split it finer;
@@ -133,7 +134,10 @@ object ExtractJob {
 
     /** Hash-shuffle on [[bucketCol]]: parse tasks aligned to resume
       * buckets, so the bucketed sink writes ~one file per bucket instead
-      * of tasks×buckets small files. Used by the writing jobs.
+      * of tasks×buckets small files. Used by the bucket-partitioned
+      * writers: the batch [[ExtractJob.run]] and the bucket resume wrapper
+      * [[ResumableExtract]] ([[FileResumableExtract]] parses on
+      * [[ScanSplits]]).
       */
     case object ByBucket extends Layout
   }
@@ -169,10 +173,10 @@ object ExtractJob {
   def partitionMetrics(results: DataFrame): DataFrame =
     unitMetrics(results, "partition_id")
 
-  /** Lineage/metrics rows keyed on an arbitrary commit unit (bucket,
-    * file_id, …) so the resumable protocols can (re)write metrics
-    * idempotently per unit — a replayed unit OVERWRITES its metrics
-    * partition instead of double-counting an append.
+  /** Lineage/metrics rows keyed on a resume unit (bucket or file_id).
+    * [[CommitCore]] publishes one run of them per restart; a unit replayed
+    * after a crash gets a row in a LATER run, which supersedes its earlier
+    * row in [[CommitCore.readMetrics]] instead of double-counting.
     */
   def unitMetrics(results: DataFrame, unit: String): DataFrame =
     results.groupBy(col(unit)).agg(

@@ -1,48 +1,42 @@
 package graft.jobs
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{CanonicalSignature, InputDoc}
 import graft.parse.{DocParser, SignatureTable}
 import org.apache.spark.TaskContext
 
-/** Checkpoint/resume at INPUT-FILE granularity — the zero-shuffle
-  * alternative to the bucket protocol ([[ResumableExtract]]).
+/** Checkpoint/resume at INPUT-FILE granularity — the zero-shuffle resume
+  * unit of [[CommitCore]] (the bucket unit is [[ResumableExtract]]).
   *
-  * The bucket design pays a full-corpus hash shuffle before parsing so sink
+  * The bucket unit pays a full-corpus hash shuffle before parsing so sink
   * files align with resume units. At 100 TB that shuffle moves every raw
   * byte once — the single most expensive avoidable operation in the job.
   * Tracking completed INPUT FILES instead (exactly how Structured
   * Streaming's file source checkpoints) removes it:
   *
   *  - the resume unit is one input parquet file; `file_id` =
-  *    md5(file basename), a fixed-width safe partition value;
+  *    md5(root-relative path), a fixed-width safe partition value;
   *  - parse runs on the scan's own splits (ScanSplits — raw bytes never
   *    move); output is written `partitionBy("file_id")`, so each task
   *    writes only into its own file's partition dirs;
-  *  - a file is COMMITTED iff its id appears in a `_manifest` roll-up
-  *    (one immutable `rollup_N.manifest` per run, written atomically after
-  *    the write job commits) or as a legacy loose `file_<id>.done` marker;
-  *    reads take the union, [[compactManifest]] merges history back to one
-  *    file; rollback-on-start deletes uncommitted `file_id=` dirs;
+  *  - manifest, rollback-on-start, metrics and commit are the core's;
   *  - resume lists input files, anti-joins the manifest, and scans ONLY
   *    the pending files — committed input is never re-read, let alone
   *    re-parsed (file-level pruning beats even partition pruning).
   *
   * Trade-off vs buckets: resume granularity follows input file sizing
   * (fine if the table is written with sane file sizes, as Iceberg
-  * enforces). The manifest grows with RUN count (one roll-up per run, ids
-  * batched inside), and [[compactManifest]] periodically merges roll-ups +
-  * legacy loose markers into a single file — the same shape as Iceberg
-  * snapshot-log compaction, mirrored locally.
+  * enforces).
   */
 object FileResumableExtract {
 
+  /** The resume unit's partition column. */
+  val UnitCol = "file_id"
+
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def manifestDir(out: String) = new Path(s"$out/_manifest")
 
   /** File id = md5 of the input file's ROOT-RELATIVE path (not the bare
     * basename): nested layouts (date partitions, Iceberg data dirs) reuse
@@ -84,7 +78,7 @@ object FileResumableExtract {
   /** RECURSIVE input listing: nested layouts (date partitions, Iceberg-ish
     * `data/` trees) are first-class, not silently skipped. Any path
     * component starting with `_` or `.` is excluded (metadata dirs like
-    * `_manifest`, `_SUCCESS`, hidden temp dirs) — the same convention
+    * `_SUCCESS`, `_temporary`, hidden temp dirs) — the same convention
     * Spark's own file index applies.
     */
   def inputFiles(spark: SparkSession, inPath: String): Seq[String] =
@@ -131,203 +125,43 @@ object FileResumableExtract {
     buf.sortBy(_._1).toSeq
   }
 
-  /** Committed = present in any roll-up manifest OR as a loose
-    * `file_<id>.done` marker. Runs commit one roll-up per (re)start, so the
-    * manifest grows with RUN count, not file count; [[compactManifest]]
-    * merges history back to a single file (the Iceberg snapshot-log-
-    * compaction shape, on the local marker stand-in).
+  /** Committed input files (see [[CommitCore.completed]]). */
+  def completedFileIds(spark: SparkSession, out: String): Set[String] =
+    CommitCore.completed(spark, out, UnitCol)
+
+  /** Snapshot-log compaction of the commit manifest (see
+    * [[CommitCore.compactManifest]]).
     */
-  def completedFileIds(spark: SparkSession, out: String): Set[String] = {
-    val f = fs(spark, out)
-    val dir = manifestDir(out)
-    if (!f.exists(dir)) Set.empty
-    else {
-      val sts = f.listStatus(dir)
-      val loose = sts.iterator.map(_.getPath.getName).collect {
-        case n if n.startsWith("file_") && n.endsWith(".done") =>
-          n.stripPrefix("file_").stripSuffix(".done")
-      }.toSet
-      val rolled = sts.iterator
-        .filter(st => isRollup(st.getPath.getName))
-        .flatMap(st => readLines(f, st.getPath)).toSet
-      loose ++ rolled
-    }
-  }
+  def compactManifest(spark: SparkSession, out: String): Unit =
+    CommitCore.compactManifest(spark, out, UnitCol)
 
-  private def isRollup(name: String): Boolean =
-    name.startsWith("rollup_") && name.endsWith(".manifest")
+  /** Per-file lineage/metrics, latest run wins (see [[CommitCore.readMetrics]]). */
+  def readMetrics(spark: SparkSession, out: String): DataFrame =
+    CommitCore.readMetrics(spark, out, UnitCol)
 
-  private def readLines(f: FileSystem, p: Path): Seq[String] = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** Append one immutable roll-up manifest (temp write + rename — readers
-    * never observe a partial file; a crash leaves only an ignorable
-    * `.tmp`).
+  /** The extracted results table, retention-consistent; `file_id` stays a
+    * STRING (see [[CommitCore.readResults]]).
     */
-  private def writeRollup(f: FileSystem, out: String, ids: Seq[String]): Path = {
-    val dir = manifestDir(out)
-    f.mkdirs(dir)
-    val existing =
-      f.listStatus(dir).iterator.map(_.getPath.getName).filter(isRollup)
-        .map(_.stripPrefix("rollup_").stripSuffix(".manifest").toLong)
-    val idx = (existing ++ Iterator(-1L)).max + 1
-    val name = f"rollup_$idx%06d.manifest"
-    val tmp = new Path(dir, s".$name.tmp")
-    val os = f.create(tmp, true)
-    try os.write((ids.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    val dst = new Path(dir, name)
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(s"manifest roll-up rename $tmp -> $dst failed")
-    dst
-  }
+  def readResults(spark: SparkSession, out: String): DataFrame =
+    CommitCore.readResults(spark, out, UnitCol)
 
-  /** Merge every roll-up and loose marker into ONE fresh roll-up, then
-    * delete the merged sources. Any crash ordering is safe: the new
-    * roll-up is renamed in before anything is deleted, so ids are at worst
-    * present twice — and reads take the union.
-    */
-  def compactManifest(spark: SparkSession, out: String): Unit = {
-    val f = fs(spark, out)
-    val dir = manifestDir(out)
-    if (!f.exists(dir)) return
-    val sts = f.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      isRollup(n) || (n.startsWith("file_") && n.endsWith(".done"))
-    }
-    if (sts.length <= 1 && sts.forall(st => isRollup(st.getPath.getName))) return
-    val ids = completedFileIds(spark, out).toSeq.sorted
-    writeRollup(f, out, ids)
-    sts.foreach(st => f.delete(st.getPath, false))
-  }
-
-  def rollbackUncommitted(spark: SparkSession, out: String): Unit =
-    rollbackUncommitted(spark, out, completedFileIds(spark, out))
-
-  /** Variant taking an already-read manifest — run() passes its own copy so
-    * a restart reads the manifest once, not once per phase.
-    */
-  def rollbackUncommitted(spark: SparkSession, out: String, done: Set[String]): Unit = {
-    val f = fs(spark, out)
-    val resultsDir = new Path(s"$out/results")
-    if (f.exists(resultsDir))
-      f.listStatus(resultsDir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("file_id=") && !done.contains(n.stripPrefix("file_id=")))
-          f.delete(st.getPath, true)
-      }
-  }
-
-  private def nextMetricsRun(f: FileSystem, out: String): Long = {
-    val dir = new Path(s"$out/metrics")
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("run_"))
-      .map(n => scala.util.Try(n.stripPrefix("run_").toLong).getOrElse(-1L))
-      .foldLeft(-1L)(math.max) + 1
-  }
-
-  /** Per-file lineage/metrics view with replay supersession: reads every
-    * COMMITTED `metrics/run_<k>` dir (the `_SUCCESS` marker gates out a run
-    * whose write was interrupted) and keeps, per file_id, only the row from
-    * the LATEST run — a file replayed after a lost commit contributes once,
-    * from the run that actually produced its surviving output. Cost at any
-    * scale: one shuffle over #files scalar rows.
-    */
-  def readMetrics(spark: SparkSession, out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val f = fs(spark, out)
-    val dir = new Path(s"$out/metrics")
-    val dirs =
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).iterator
-        .filter(st => st.getPath.getName.startsWith("run_") &&
-          f.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.toString).toSeq.sorted
-    // A fully successful run over an input of only EMPTY files writes no
-    // metrics run at all (the dirs.nonEmpty guard in the metrics phase), so
-    // "no committed runs" is a legitimate committed state, not corruption —
-    // lineage reads get zero rows with the unitMetrics schema, not a crash.
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("file_id", StringType),
-        StructField("docs_in", LongType),
-        StructField("docs_ok", LongType),
-        StructField("docs_err", LongType),
-        StructField("spans_out", LongType),
-        StructField("bytes_in", LongType),
-        StructField("parse_us", LongType)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val w = Window.partitionBy("file_id").orderBy(col("run").desc)
-    spark.read.parquet(dirs: _*)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "run")
-  }
-
-  /** The results table's schema, stated explicitly: [[ExtractJob.ExtractedRow]]'s
-    * columns plus the `file_id` STRING partition column. Reads pass it via
-    * `spark.read.schema(...)` so partition-type inference never runs —
-    * an all-digit hex id set would otherwise infer DECIMAL, dropping
-    * leading zeros (and a retention rewrite would then stage partitions
-    * under the wrong dir names). An explicit schema (rather than toggling
-    * `spark.sql.sources.partitionColumnTypeInference.enabled` around the
-    * read) keeps concurrent reads in one SparkSession from interleaving a
-    * session-global set/restore and leaking the wrong value to unrelated
-    * queries.
-    */
-  private[graft] val resultsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[ExtractJob.ExtractedRow].schema
-      .add("file_id", org.apache.spark.sql.types.StringType)
-
-  /** The extracted results table, retention-consistent: rolls a crashed
-    * [[deleteWhere]] swap forward first (intent-present only — the
-    * reader-safe recovery scope, see [[graft.sources.RetentionSwap]]).
-    * `file_id` stays a STRING via the explicit [[resultsSchema]].
-    */
-  def readResults(spark: SparkSession, out: String): DataFrame = {
-    graft.sources.RetentionSwap.recover(
-      spark, out, "file_id", discardIntentless = false)
-    spark.read.schema(resultsSchema).parquet(s"$out/results")
-  }
-
-  /** Retention delete on the file-granular layout (the declared 100 TB
-    * default protocol) — `DELETE FROM results WHERE predicate` via the
-    * shared [[graft.sources.RetentionSwap]] staged partition-swap, exactly
-    * the bucket store's protocol with `file_id=` partitions. The commit
-    * manifest is untouched: a purged input file stays committed, so a
-    * subsequent resume run remains a no-op and deleted documents are never
-    * re-extracted from still-present input. Single maintenance process per
-    * output dir (see RetentionSwap's concurrency contract); concurrent
-    * readers and resume runs only ever roll a swap forward.
+  /** Retention delete on the file-granular layout (see
+    * [[CommitCore.deleteWhere]]): a purged input file stays committed, so
+    * deleted documents are never re-extracted from still-present input.
     */
   def deleteWhere(spark: SparkSession, out: String,
       predicate: org.apache.spark.sql.Column): Long =
-    graft.sources.RetentionSwap.deleteWhere(spark, out, "file_id", predicate,
-      () => readResults(spark, out))
+    CommitCore.deleteWhere(spark, out, UnitCol, predicate)
 
-  /** Test-only injected crash (see `run`'s `failAfter`): thrown AFTER the
-    * named phase completes, simulating a kill in the window before the next
-    * phase starts — the randomized kill-point sweep in FileResumeSpec
-    * drives it.
-    */
-  final case class InjectedKill(point: String)
-    extends RuntimeException(s"injected kill after phase '$point'")
+  /** The core's injected crash, under the name callers match on. */
+  val InjectedKill = CommitCore.InjectedKill
 
   /** One (re)start. Returns docs processed by THIS invocation.
     * `timings`, when supplied, receives per-phase wall seconds
     * (rollback / write / metrics / commit) for scaling diagnosis.
-    * `failAfter` (tests only) throws [[InjectedKill]] after the named
-    * phase ("rollback" | "write" | "metrics"), simulating a crash in each
-    * inter-phase window.
+    * `failAfter` (tests only) throws [[CommitCore.InjectedKill]] after the
+    * named phase ("rollback" | "write" | "metrics"), simulating a crash in
+    * each inter-phase window.
     */
   def run(
       spark: SparkSession,
@@ -336,39 +170,30 @@ object FileResumableExtract {
       table: Seq[CanonicalSignature] = SignatureTable.Default,
       onlyFiles: Option[Set[String]] = None,
       timings: Option[scala.collection.mutable.Map[String, Double]] = None,
-      failAfter: Option[String] = None): Long = {
-    import spark.implicits._
-    def timed[A](phase: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      timings.foreach(m => m(phase) = m.getOrElse(phase, 0.0) +
-        (System.nanoTime() - t0) / 1e9)
-      if (failAfter.contains(phase)) throw InjectedKill(phase)
-      r
+      failAfter: Option[String] = None): Long =
+    CommitCore.run(spark, outPath, UnitCol, timings, failAfter) { done =>
+      // relative paths hashed ONCE per restart; the id list feeds the scan,
+      // the metrics partition intersection, and the commit roll-up
+      val pending = inputFilesWithIds(spark, inPath)
+        .filter { case (_, id) =>
+          !done.contains(id) && onlyFiles.forall(_.contains(id))
+        }
+      (pending.map(_._2), () => parse(spark, inPath, pending.map(_._1), table))
     }
-    // roll a crashed retention swap FORWARD first (intent-present only —
-    // same reader-safe scope as readResults): affected file_ids stay
-    // committed in the manifest, so without recovery the resume below
-    // would neither restore nor reprocess their half-swapped output
-    graft.sources.RetentionSwap.recover(
-      spark, outPath, "file_id", discardIntentless = false)
-    val done = completedFileIds(spark, outPath)
-    timed("rollback")(rollbackUncommitted(spark, outPath, done))
-    // relative paths hashed ONCE per restart; the id list feeds the scan
-    // filter, the metrics partition intersection, and the commit roll-up
-    val pendingPairs = inputFilesWithIds(spark, inPath)
-      .filter { case (_, id) =>
-        !done.contains(id) && onlyFiles.forall(_.contains(id))
-      }
-    val pending = pendingPairs.map(_._1)
-    val pendingIds = pendingPairs.map(_._2)
-    if (pending.isEmpty) return 0L
 
-    // Scan ONLY the pending files; no shuffle anywhere in the job.
+  /** Scan ONLY the pending files and parse them on the scan's own splits,
+    * tagging each row with its input file's id; no shuffle anywhere.
+    */
+  private def parse(
+      spark: SparkSession,
+      inPath: String,
+      files: Seq[String],
+      table: Seq[CanonicalSignature]): DataFrame = {
+    import spark.implicits._
     val bc = spark.sparkContext.broadcast(table)
     val nb = ExtractJob.NumBuckets // driver-side capture (cluster-safe)
     val rootPath = rootFsPath(spark, inPath) // driver-side capture too
-    val results0 = spark.read.parquet(pending: _*)
+    spark.read.parquet(files: _*)
       .select(col("doc_id").as("_1"), col("spans").as("_2"),
         input_file_name().as("_3"))
       .as[(String, Seq[graft.model.Span], String)]
@@ -387,65 +212,7 @@ object FileResumableExtract {
           (ExtractJob.rowOf(InputDoc(docId, spans), pool, pid, nb), fid)
         }
       }
-      .select(col("_1.*"), col("_2").as("file_id"))
-    val (results, obs) = ExtractJob.observeCounts(results0)
-
-    graft.sources.DocStore.withDynamicOverwrite(spark) {
-      timed("write") {
-        results.write.mode(SaveMode.Overwrite)
-          .partitionBy("file_id")
-          .parquet(s"$outPath/results")
-      }
-    }
-
-    // Metrics per commit unit (file_id), published as ONE `run_<k>` dir per
-    // (re)start — the same roll-up shape as the manifest. The former
-    // per-file_id dynamic-partition-overwrite layout wrote #files tiny
-    // partition dirs per run: a measured scale-INVARIANT ~4.4s of committer
-    // churn at 300 files (and millions of tiny dirs at production file
-    // counts). Replay idempotency moves to the reader ([[readMetrics]]):
-    // a file replayed after a crash between this write and its commit gets
-    // a row in a LATER run, which supersedes — lineage sums never
-    // double-count. The results re-read targets ONLY this run's partition
-    // dirs and prunes to scalar metric columns (no span decode).
-    timed("metrics") {
-      val f = fs(spark, outPath)
-      // one listing intersected with the pending set — NOT one exists()
-      // RPC per pending file, which would be the same O(#files) serial
-      // driver tail the per-file marker commit was removed for (the
-      // intersection also drops empty input files, which write no
-      // partition)
-      val pendingIdSet = pendingIds.toSet
-      val resultsDir = new Path(s"$outPath/results")
-      val dirs =
-        if (!f.exists(resultsDir)) Seq.empty[String]
-        else f.listStatus(resultsDir).iterator
-          .filter(st => st.getPath.getName.startsWith("file_id=") &&
-            pendingIdSet.contains(st.getPath.getName.stripPrefix("file_id=")))
-          .map(_.getPath.toString).toSeq
-      if (dirs.nonEmpty) {
-        // explicit schema (see resultsSchema): file_id stays STRING without
-        // touching the session-global partition-type-inference conf
-        val written = spark.read.schema(resultsSchema)
-          .option("basePath", s"$outPath/results").parquet(dirs: _*)
-        val runId = nextMetricsRun(f, outPath)
-        ExtractJob.unitMetrics(written, "file_id")
-          .withColumn("run", lit(runId))
-          .repartition(1) // #files rows of scalars — one small file
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outPath/metrics/run_$runId")
-      }
-    }
-    timed("commit") {
-      // ONE roll-up manifest per run, not one marker file per input file:
-      // the commit barrier is O(1) filesystem operations regardless of how
-      // many files the run covered (the per-file marker loop was a
-      // measured scale-INVARIANT ~2s tail at 64 files — pure constant
-      // cost that capped whole-job scaling efficiency).
-      writeRollup(fs(spark, outPath), outPath, pendingIds)
-    }
-    val (ok, err) = ExtractJob.okErr(obs)
-    ok + err
+      .select(col("_1.*"), col("_2").as(UnitCol))
   }
 }
 

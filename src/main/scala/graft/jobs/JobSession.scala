@@ -2,9 +2,11 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session-tuning surface shared by every job main
-  * (ExtractMain / ResumableMain / FileResumableMain) — previously three
-  * hand-maintained copies whose configs could silently drift.
+/** The one session-tuning surface shared by every job main: the batch
+  * ExtractMain and the two resume units of the one commit core
+  * ([[CommitCore]]) — ResumableMain (bucket) and FileResumableMain
+  * (input file) — previously three hand-maintained copies whose configs
+  * could silently drift.
   *
   * Env knobs: SPARK_GRAFT_MASTER, SPARK_GRAFT_CPUS (also sizes
   * `spark.sql.shuffle.partitions`), GRAFT_MAX_PARTITION_BYTES

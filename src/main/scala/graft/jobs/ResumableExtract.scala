@@ -1,34 +1,27 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.model.{CanonicalSignature, InputDoc}
 import graft.parse.SignatureTable
-import graft.sources.{DocStore, ParquetDocStore}
 
-/** Checkpoint/resume at partition (bucket) granularity — the
-  * snapshot-equivalent manifest protocol of the north rule's
-  * "Iceberg-snapshot-based checkpointing" (SURVEY §4.2, §7.3 R7), expressed
-  * against the [[graft.sources.DocStore]] seam (parquet locally, Iceberg
-  * drop-in on a real cluster):
+/** Checkpoint/resume at BUCKET granularity — the bucket resume unit of
+  * [[CommitCore]] (the input-file unit is [[FileResumableExtract]]).
   *
-  *  - a bucket (= [[ExtractJob.bucketOf]], uniform hash of doc_id) is
-  *    COMMITTED iff the store's manifest says so; markers are written only
-  *    after the Spark write job commits, so a killed job leaves at worst
-  *    partial bucket output with no marker;
-  *  - rollback-on-start deletes uncommitted partials BEFORE any plan reads
-  *    the results path (correctness independent of listing caches);
-  *  - resume = anti-join against the committed bucket set, then a
-  *    dynamic-partition-overwrite write of exactly the pending buckets.
-  *
-  * The parse core is a pure per-row function (no cross-row state —
-  * SURVEY §3 E1), which is what makes bucket-granular replay sound: a
-  * reprocessed doc yields byte-identical spans.
+  * A bucket (= [[ExtractJob.bucketOf]], uniform hash of doc_id) is the
+  * north rule's "partition granularity": resume filters the input on
+  * [[ExtractJob.bucketCol]] to the pending buckets and parses them with
+  * [[ExtractJob.Layout.ByBucket]], so each bucket's output lands in ~one
+  * file under `results/bucket=<b>/`. Manifest, rollback-on-start, metrics
+  * and commit are the core's.
   */
 object ResumableExtract {
 
+  /** The resume unit's partition column. */
+  val UnitCol = "bucket"
+
   /** One (re)start of the job. Returns the number of docs processed by THIS
-    * invocation (0 when everything was already committed).
+    * invocation (0 when everything was already committed). `timings` and
+    * `failAfter` are the core's phase hooks (see [[CommitCore.run]]).
     */
   def run(
       spark: SparkSession,
@@ -36,56 +29,47 @@ object ResumableExtract {
       outPath: String,
       table: Seq[CanonicalSignature] = SignatureTable.Default,
       onlyBuckets: Option[Set[Int]] = None,
-      store: DocStore = ParquetDocStore): Long = {
-    val done = completedBuckets(spark, outPath, store)
-    store.rollbackUncommitted(spark, outPath)
-    val docs0: Dataset[InputDoc] = store.readDocs(spark, inPath)
+      timings: Option[scala.collection.mutable.Map[String, Double]] = None,
+      failAfter: Option[String] = None): Long =
+    CommitCore.run(spark, outPath, UnitCol, timings, failAfter) { done =>
+      // decided from the manifest alone: a bucket holding zero docs is still
+      // pending until committed, and nothing pending means no Spark job
+      val pending = (0 until ExtractJob.NumBuckets)
+        .filter(b => !done.contains(b.toString) && onlyBuckets.forall(_.contains(b)))
+      (pending.map(_.toString), () => parse(spark, inPath, pending, table))
+    }
+
+  /** Read the input, keep only the pending buckets' docs, and parse them
+    * bucket-aligned.
+    */
+  private def parse(
+      spark: SparkSession,
+      inPath: String,
+      pending: Seq[Int],
+      table: Seq[CanonicalSignature]): DataFrame = {
+    import spark.implicits._
+    val docs = ExtractJob.readDocs(spark, inPath).toDF()
     // Column-form resume filter: crc32 bucket derivation stays inside
     // WholeStageCodegen, so committed docs are skipped without
     // deserializing their span payloads into InputDoc objects (a typed
     // lambda here would decode the FULL corpus on every restart).
-    val bc = ExtractJob.bucketCol
-    val pending = onlyBuckets.foldLeft(
-      if (done.isEmpty) docs0.toDF() else docs0.toDF().filter(!bc.isin(done.toSeq: _*))
-    )((df, only) => df.filter(bc.isin(only.toSeq: _*)))
-    import spark.implicits._
-    val docs = pending.as[InputDoc]
-    // this run covers EVERY pending bucket (the filter above scans them
-    // all), so the commit set is the pending set — including buckets that
-    // happen to contain zero docs. Committing only buckets observed in the
-    // written rows would leave an empty bucket pending forever: every
-    // restart re-scans the full input and the protocol never converges.
-    val pendingBuckets = (0 until ExtractJob.NumBuckets)
-      .filterNot(done)
-      .filter(b => onlyBuckets.forall(_.contains(b)))
-    if (docs.isEmpty) {
-      store.commitBuckets(spark, outPath, pendingBuckets)
-      return 0L
-    }
-
-    val (results, obs) = ExtractJob.observeCounts(
-      ExtractJob.extract(spark, docs, table, ExtractJob.Layout.ByBucket).toDF())
-    store.writeBuckets(results, outPath)
-    val (okCount, errCount) = ExtractJob.okErr(obs)
-
-    // Only now is the bucket durable — publish this run's lineage/metrics
-    // idempotently per bucket (a crash between here and commitBuckets
-    // replays the buckets on restart and OVERWRITES these rows — no
-    // double count), then commit the markers. The read-back prunes to the
-    // scalar metric columns; span payloads are never decoded again.
-    val written = store.readResults(spark, outPath)
-      .filter(!col("bucket").isin(done.toSeq: _*))
-    store.writeUnitMetrics(
-      ExtractJob.unitMetrics(written, "bucket"), outPath, "bucket")
-    store.commitBuckets(spark, outPath, pendingBuckets)
-    okCount + errCount
+    val todo =
+      if (pending.size == ExtractJob.NumBuckets) docs
+      else docs.filter(ExtractJob.bucketCol.isin(pending: _*))
+    ExtractJob.extract(spark, todo.as[InputDoc], table, ExtractJob.Layout.ByBucket).toDF()
   }
 
-  def completedBuckets(
-      spark: SparkSession,
-      out: String,
-      store: DocStore = ParquetDocStore): Set[Int] =
-    store.completedBuckets(spark, out)
+  /** Committed buckets (see [[CommitCore.completed]]). */
+  def completedBuckets(spark: SparkSession, out: String): Set[Int] =
+    CommitCore.completed(spark, out, UnitCol).map(_.toInt)
+
+  /** Per-bucket lineage/metrics, latest run wins (see [[CommitCore.readMetrics]]). */
+  def readMetrics(spark: SparkSession, out: String): DataFrame =
+    CommitCore.readMetrics(spark, out, UnitCol)
+
+  /** Retention delete on the bucket layout (see [[CommitCore.deleteWhere]]). */
+  def deleteWhere(spark: SparkSession, out: String, predicate: Column): Long =
+    CommitCore.deleteWhere(spark, out, UnitCol, predicate)
 }
 
 /** spark-submit / runMain entry: ResumableMain <inDir> <outDir>. Safe to

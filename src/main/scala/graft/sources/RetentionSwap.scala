@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Shared staged partition-swap DELETE for path-based parquet tables
-  * (reference `storage.py:177-203` cleanup analog). Both result stores use
-  * it: the bucket-partitioned [[ParquetDocStore]] (`bucket=<int>` dirs) and
-  * the file-granular `FileResumableExtract` layout (`file_id=<hex>` dirs) —
-  * one implementation of the swap protocol and its crash recovery instead
-  * of two hand-maintained copies of rename-ordering subtleties.
+  * (reference `storage.py:177-203` cleanup analog), used by the resumable
+  * jobs' commit core (`graft.jobs.CommitCore`) for both resume units:
+  * `bucket=<int>` and `file_id=<hex>` partitions — one implementation of
+  * the swap protocol and its crash recovery, parameterised by the
+  * partition column.
   *
   * Protocol (per `deleteWhere` call):
   *  1. recover any interrupted previous swap (see [[recover]]);
@@ -111,8 +111,8 @@ private[graft] object RetentionSwap {
 
   /** `DELETE FROM <root>/results WHERE predicate`, swapping only affected
     * `partCol=` partitions. `readLive` supplies the live results DataFrame
-    * (the stores differ in partition-type-inference handling). Returns the
-    * number of rows removed.
+    * (the caller's read, with its explicit schema). Returns the number of
+    * rows removed.
     */
   def deleteWhere(
       spark: SparkSession,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.corpus.CorpusGen
 import graft.parse.DocParser
-import graft.sources.ParquetDocStore
 import java.nio.file.Files
 
 /** Retention delete (P5, `storage.py:177-203` analog): deleteWhere removes
@@ -49,7 +48,7 @@ class DocStoreSpec extends AnyFunSuite {
       all.filter(_._2 != fullBucket).take(5).map(_._1)).toSet
     assert(victims.nonEmpty && victims.size < 200)
 
-    val deleted = ParquetDocStore.deleteWhere(
+    val deleted = ResumableExtract.deleteWhere(
       spark, out, col("doc_id").isin(victims.toSeq: _*))
     assert(deleted == victims.size.toLong)
 
@@ -65,7 +64,7 @@ class DocStoreSpec extends AnyFunSuite {
     assert(hashes(out).keySet == before.keySet -- victims)
 
     // deleting nothing is a no-op
-    assert(ParquetDocStore.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
+    assert(ResumableExtract.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
     assert(hashes(out) == after)
   }
 
@@ -110,7 +109,7 @@ class DocStoreSpec extends AnyFunSuite {
     // the next deleteWhere call must roll the swap FORWARD before doing
     // anything else: X's delete completed, Y's survivors moved home, Z
     // untouched
-    assert(ParquetDocStore.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
+    assert(ResumableExtract.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
     assert(!f.exists(staging), "staging dir not cleaned up")
     assert(!f.exists(new Path(s"$out/results/bucket=$bx")),
       "fully-deleted bucket resurrected by recovery")
@@ -124,7 +123,7 @@ class DocStoreSpec extends AnyFunSuite {
     // swap started, results untouched) is rolled back — discarded
     f.mkdirs(new Path(staging, s"bucket=$by"))
     f.create(new Path(staging, "_SUCCESS"), true).close()
-    assert(ParquetDocStore.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
+    assert(ResumableExtract.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
     assert(!f.exists(staging))
     assert(hashes(out) == after)
   }

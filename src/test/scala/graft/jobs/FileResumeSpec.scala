@@ -9,8 +9,10 @@ import java.nio.file.Files
 /** Kill/rerun test for the zero-shuffle file-granular resume: interrupted
   * job (some input files committed, one partial garbage output dir) resumes
   * reading ONLY the pending input files and converges byte-identically.
+  * The kill-point sweep and the no-op restart check run for both resume
+  * units of the commit core.
   */
-class FileResumeSpec extends AnyFunSuite {
+class FileResumeSpec extends AnyFunSuite with ResumeUnit.PerUnit {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
@@ -220,36 +222,36 @@ class FileResumeSpec extends AnyFunSuite {
     }
   }
 
-  test("randomized kill-point sweep: resume + compaction converge byte-identically from any crash interleaving") {
+  testPerUnit("randomized kill-point sweep: resume + compaction converge byte-identically from any crash interleaving") { unit =>
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val base = Files.createTempDirectory("graft_fresume_kill_").toString
     val in = s"$base/docs"
     spark.range(0, 80, 1, 8).map(i => CorpusGen.gen(i)).write.parquet(in)
-    val allIds = FileResumableExtract.inputFiles(spark, in)
-      .map(p => FileResumableExtract.fileId(
-        new org.apache.hadoop.fs.Path(p).getName)).toSet
-    assert(allIds.size == 8)
+    val allIds = unit.all(spark, in)
+    assert(allIds.size == (if (unit == ResumeUnit.File) 8 else ExtractJob.NumBuckets))
 
     val golden = {
       val o = s"$base/golden"
-      assert(FileResumableExtract.run(spark, in, o) == 80L)
+      assert(unit.run(spark, in, o) == 80L)
       hashes(o)
     }
 
     // deterministic seed: the sweep must be reproducible in CI; the seed is
     // arbitrary but fixed, and the kill tally below proves it exercises
-    // every inter-phase window
+    // every inter-phase window. Each attempt commits at most about half of
+    // the pending units, so the attempt bound scales with the unit count.
     val rnd = new scala.util.Random(20260817L)
+    val maxAttempts = 5 * allIds.size
     val kills = scala.collection.mutable.Map[String, Int]()
     for (iter <- 0 until 10) {
       val out = s"$base/out_$iter"
       var safety = 0
-      while (FileResumableExtract.completedFileIds(spark, out) != allIds
-        && safety < 40) {
+      while (CommitCore.completed(spark, out, unit.col) != allIds
+        && safety < maxAttempts) {
         safety += 1
-        val pending = (allIds -- FileResumableExtract.completedFileIds(spark, out)).toSeq.sorted
-        // random nonempty subset of the pending files for this attempt
+        val pending = (allIds -- CommitCore.completed(spark, out, unit.col)).toSeq.sorted
+        // random nonempty subset of the pending units for this attempt
         val take = 1 + rnd.nextInt(pending.size)
         val subset = rnd.shuffle(pending).take(take).toSet
         val fail = rnd.nextInt(4) match {
@@ -259,20 +261,19 @@ class FileResumeSpec extends AnyFunSuite {
           case _ => None
         }
         try {
-          FileResumableExtract.run(spark, in, out,
-            onlyFiles = Some(subset), failAfter = fail)
+          unit.run(spark, in, out, only = Some(subset), failAfter = fail)
           assert(fail.isEmpty, s"failAfter=$fail did not throw")
         } catch {
-          case FileResumableExtract.InjectedKill(p) =>
+          case CommitCore.InjectedKill(p) =>
             kills(p) = kills.getOrElse(p, 0) + 1
         }
-        if (rnd.nextBoolean()) FileResumableExtract.compactManifest(spark, out)
+        if (rnd.nextBoolean()) CommitCore.compactManifest(spark, out, unit.col)
       }
-      assert(safety < 40, s"iteration $iter did not converge")
+      assert(safety < maxAttempts, s"iteration $iter did not converge")
       // converged state is byte-identical to the uninterrupted run, and
       // lineage metrics count every doc exactly once
       assert(hashes(out) == golden, s"iteration $iter diverged")
-      val docsIn = FileResumableExtract.readMetrics(spark, out)
+      val docsIn = CommitCore.readMetrics(spark, out, unit.col)
         .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
       assert(docsIn == 80L, s"iteration $iter metrics double-counted: $docsIn")
     }
@@ -280,6 +281,32 @@ class FileResumeSpec extends AnyFunSuite {
     assert(totalKills >= 20, s"sweep only injected $totalKills kills: $kills")
     assert(kills.keySet == Set("rollback", "write", "metrics"),
       s"some inter-phase window never exercised: $kills")
+  }
+
+  testPerUnit("a no-op restart launches no Spark job") { unit =>
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fresume_noop_").toString
+    val in = s"$base/docs"
+    spark.range(0, 60, 1, 3).map(i => CorpusGen.gen(i)).write.parquet(in)
+    val out = s"$base/out"
+    assert(unit.run(spark, in, out) == 60L)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc) // the first run's events land first
+    sc.addSparkListener(listener)
+    try {
+      // nothing is pending: the restart decides that from the manifest and
+      // the driver-side listing alone
+      assert(unit.run(spark, in, out) == 0L)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(jobs.get == 0, s"no-op ${unit.col} restart launched ${jobs.get} Spark job(s)")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("readMetrics ignores an uncommitted metrics run dir (no _SUCCESS)") {

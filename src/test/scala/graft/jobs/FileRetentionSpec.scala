@@ -11,9 +11,10 @@ import java.nio.file.Files
   * layout: deleteWhere removes exactly the matching rows via the shared
   * RetentionSwap protocol, the commit manifest stays intact (no input
   * reprocessing, no resurrection), and an interrupted swap self-heals on
-  * the next maintenance call AND on the resume/read path.
+  * the next maintenance call AND on the resume/read path (for both resume
+  * units of the commit core).
   */
-class FileRetentionSpec extends AnyFunSuite {
+class FileRetentionSpec extends AnyFunSuite with ResumeUnit.PerUnit {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
@@ -22,9 +23,9 @@ class FileRetentionSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def hashes(out: String): Map[String, String] = {
+  private def hashes(out: String, unit: ResumeUnit = ResumeUnit.File): Map[String, String] = {
     import spark.implicits._
-    FileResumableExtract.readResults(spark, out)
+    CommitCore.readResults(spark, out, unit.col)
       .select("doc_id", "spans").as[(String, Seq[graft.model.OutSpan])]
       .collect().map { case (d, s) => d -> DocParser.spanHash(s) }.toMap
   }
@@ -145,7 +146,7 @@ class FileRetentionSpec extends AnyFunSuite {
     assert(docsIn == 80L, s"lineage drifted: $docsIn")
   }
 
-  test("interrupted retention swap self-heals: run/read roll forward, deleteWhere discards orphans") {
+  testPerUnit("interrupted retention swap self-heals: run/read roll forward, deleteWhere discards orphans") { unit =>
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -153,23 +154,27 @@ class FileRetentionSpec extends AnyFunSuite {
     val in = s"$base/docs"
     spark.range(0, 120, 1, 4).map(i => CorpusGen.gen(i)).write.parquet(in)
     val out = s"$base/out"
-    assert(FileResumableExtract.run(spark, in, out) == 120L)
-    val before = hashes(out)
+    assert(unit.run(spark, in, out) == 120L)
+    val before = hashes(out, unit)
     val f = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val u = unit.col
 
     // Simulate a kill in deleteWhere's data-loss window with all three
-    // partition shapes (the DocStoreSpec scenario on file_id partitions):
+    // partition shapes (the DocStoreSpec scenario, for each resume unit):
     //   fx FULLY deleted (d:, live dir still present — recovery completes
     //      the delete), fy mid-swap (s:, survivors only in staging),
     //   fz already swapped (s:, staging gone — recovery must not touch it)
-    val fids = FileResumableExtract.completedFileIds(spark, out).toSeq.sorted
+    // (keys of partitions holding rows: an empty bucket is committed but
+    // has no results dir)
+    val fids = CommitCore.readResults(spark, out, u).select(u).distinct()
+      .collect().map(_.get(0).toString).toSeq.sorted
     val Seq(fx, fy, fz) = fids.take(3)
-    val xDocs = FileResumableExtract.readResults(spark, out)
-      .filter(col("file_id") === fx).select("doc_id").as[String].collect().toSet
+    val xDocs = CommitCore.readResults(spark, out, u)
+      .filter(col(u) === fx).select("doc_id").as[String].collect().toSet
     val staging = new Path(s"$out/_retention_staging")
     f.mkdirs(staging)
-    assert(f.rename(new Path(s"$out/results/file_id=$fy"),
-      new Path(staging, s"file_id=$fy")))
+    assert(f.rename(new Path(s"$out/results/$u=$fy"),
+      new Path(staging, s"$u=$fy")))
     f.create(new Path(staging, "_SUCCESS"), true).close()
     val intent = f.create(new Path(staging, "_affected"), true)
     intent.write(s"d:$fx\ns:$fy\ns:$fz".getBytes("UTF-8")); intent.close()
@@ -177,29 +182,29 @@ class FileRetentionSpec extends AnyFunSuite {
     // a RESUME RUN (not just the next deleteWhere) must roll the swap
     // forward before planning: the manifest still lists fx/fy as committed,
     // so without recovery their half-swapped output would stay wrong
-    assert(FileResumableExtract.run(spark, in, out) == 0L)
+    assert(unit.run(spark, in, out) == 0L)
     assert(!f.exists(staging), "staging dir not cleaned up by run()")
-    assert(!f.exists(new Path(s"$out/results/file_id=$fx")),
+    assert(!f.exists(new Path(s"$out/results/$u=$fx")),
       "fully-deleted partition resurrected by recovery")
-    assert(f.exists(new Path(s"$out/results/file_id=$fz")),
+    assert(f.exists(new Path(s"$out/results/$u=$fz")),
       "already-swapped partition destroyed by recovery")
-    assert(hashes(out) == before.view.filterKeys(!xDocs(_)).toMap,
+    assert(hashes(out, unit) == before.view.filterKeys(!xDocs(_)).toMap,
       "recovery lost or changed surviving rows")
-    val after = hashes(out)
+    val after = hashes(out, unit)
 
     // an UNCOMMITTED staging dir (no _affected intent: crash before the
     // swap started): readers and resume leave it alone (it may belong to a
     // live writer); the next deleteWhere — the maintenance entry point —
     // discards it
-    f.mkdirs(new Path(staging, s"file_id=$fy"))
+    f.mkdirs(new Path(staging, s"$u=$fy"))
     f.create(new Path(staging, "_SUCCESS"), true).close()
-    assert(hashes(out) == after) // readResults: no destructive self-heal
+    assert(hashes(out, unit) == after) // readResults: no destructive self-heal
     assert(f.exists(staging), "reader discarded intent-less staging")
-    assert(FileResumableExtract.run(spark, in, out) == 0L)
+    assert(unit.run(spark, in, out) == 0L)
     assert(f.exists(staging), "resume run discarded intent-less staging")
-    assert(FileResumableExtract.deleteWhere(spark, out, col("doc_id") === "no_such") == 0L)
+    assert(CommitCore.deleteWhere(spark, out, u, col("doc_id") === "no_such") == 0L)
     assert(!f.exists(staging), "maintenance did not discard orphaned staging")
-    assert(hashes(out) == after)
+    assert(hashes(out, unit) == after)
   }
 
   test("maintenance lease: concurrent deleteWhere fails loudly; stale lease is taken over") {

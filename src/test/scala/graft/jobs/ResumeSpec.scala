@@ -67,7 +67,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(ResumableExtract.run(spark, in, outB) == 0L)
 
     // lineage: metrics rows were appended per restart and cover all docs
-    val m = spark.read.parquet(s"$outB/metrics")
+    val m = ResumableExtract.readMetrics(spark, outB)
     assert(m.agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0) == total)
   }
 
@@ -78,19 +78,25 @@ class ResumeSpec extends AnyFunSuite {
     val out = tmp()
     assert(ResumableExtract.run(spark, in, out) == 200L)
 
-    // crash-between-metrics-and-marker simulation: one committed bucket
-    // loses its marker after its metrics were published
+    // crash-between-metrics-and-commit simulation: one committed bucket
+    // loses its commit after its metrics were published — the manifest is
+    // rewritten as legacy loose markers missing that bucket
     val done = ResumableExtract.completedBuckets(spark, out)
     // pick a NON-EMPTY committed bucket (all pending buckets commit now,
     // incl. empty ones — replaying an empty bucket would process 0 docs)
     val lost = spark.read.parquet(s"$out/results")
       .select("bucket").distinct().collect().map(_.getInt(0))
       .find(done.contains).get
-    assert(new java.io.File(s"$out/_manifest/bucket_$lost.done").delete())
+    val mdir = new java.io.File(s"$out/_manifest")
+    mdir.listFiles().foreach(f => assert(f.delete()))
+    (done - lost).foreach { b =>
+      Files.writeString(new java.io.File(mdir, s"bucket_$b.done").toPath, "")
+    }
+    assert(ResumableExtract.completedBuckets(spark, out) == done - lost)
 
     val n = ResumableExtract.run(spark, in, out)
     assert(n > 0, "the marker-less bucket must be reprocessed")
-    val docsIn = spark.read.parquet(s"$out/metrics")
+    val docsIn = ResumableExtract.readMetrics(spark, out)
       .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
     assert(docsIn == 200L, s"bucket metrics double-counted after replay: $docsIn")
   }
