@@ -81,25 +81,6 @@ object TextFlags {
     n
   }
 
-  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
-    () => java.security.MessageDigest.getInstance("MD5"))
-
-  private val HexDigits = "0123456789abcdef".toCharArray
-
-  def md5Hex(bytes: Array[Byte]): String = {
-    val d = md5.get()
-    d.reset()
-    val dig = d.digest(bytes)
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = HexDigits((dig(i) >> 4) & 0xf)
-      out(2 * i + 1) = HexDigits(dig(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   def curationFlagsCol(c: Column): Column =
     GraftColumns.column(CurationFlags(GraftColumns.expression(c)))
 }
@@ -133,7 +114,7 @@ case class CurationFlags(child: Expression)
     val row = new GenericInternalRow(4)
     row.update(0, UTF8String.fromString(TextFlags.langPred(s)))
     row.update(1, java.lang.Boolean.valueOf(qualOk))
-    row.update(2, UTF8String.fromString(TextFlags.md5Hex(bytes)))
+    row.update(2, UTF8String.fromString(graft.parse.PyCompat.md5Hex(bytes)))
     row.update(3, java.lang.Long.valueOf(TextFlags.bpeCount(s)))
     row: InternalRow
   }

@@ -237,13 +237,15 @@ case class OrderedPairs(child: Expression)
     StructField("b", LongType, nullable = false)))
 
   override def dataType: DataType = ArrayType(pairType, containsNull = false)
-  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType, containsNull = false))
+  // element nulls are rejected here, not at eval: `toLongArray` would
+  // read a null element as 0 (or NPE)
   override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) =>
+    case ArrayType(LongType, false) =>
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     case t =>
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ordered_pairs needs array<bigint> input, got ${t.catalogString}")
+        s"ordered_pairs needs array<bigint> input with non-null elements, got $t")
   }
 
   override protected def nullSafeEval(input: Any): Any = {

@@ -1,8 +1,9 @@
 package graft.jobs
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.{CanonicalSignature, InputDoc, ParsedDoc}
 import graft.parse.{DocParser, SignatureTable}
 
@@ -106,9 +107,14 @@ object ExtractJob {
       p.nBlocks, p.nBlocksKept, bucketOf(p.docId, nb), pid, bytesIn, us)
   }
 
+  /** The input's declared schema: reading with it skips parquet schema
+    * inference, a footer-reading Spark job per read.
+    */
+  val InputSchema: StructType = Encoders.product[InputDoc].schema
+
   def readDocs(spark: SparkSession, inPath: String): Dataset[InputDoc] = {
     import spark.implicits._
-    spark.read.parquet(inPath).as[InputDoc]
+    spark.read.schema(InputSchema).parquet(inPath).as[InputDoc]
   }
 
   /** How the docs are laid out across parse tasks. The choice is a

@@ -45,11 +45,7 @@ object FileResumableExtract {
     * another's pending work. For a flat input dir the relative path IS the
     * basename, so flat-layout ids (and existing manifests) are unchanged.
     */
-  def fileId(relPath: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(relPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-  }
+  def fileId(relPath: String): String = graft.parse.PyCompat.md5Hex(relPath)
 
   /** The input root's decoded absolute filesystem path — the prefix
     * stripped to form root-relative ids on both the driver (listing) and
@@ -193,7 +189,7 @@ object FileResumableExtract {
     val bc = spark.sparkContext.broadcast(table)
     val nb = ExtractJob.NumBuckets // driver-side capture (cluster-safe)
     val rootPath = rootFsPath(spark, inPath) // driver-side capture too
-    spark.read.parquet(files: _*)
+    spark.read.schema(ExtractJob.InputSchema).parquet(files: _*)
       .select(col("doc_id").as("_1"), col("spans").as("_2"),
         input_file_name().as("_3"))
       .as[(String, Seq[graft.model.Span], String)]

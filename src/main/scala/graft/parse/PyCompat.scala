@@ -274,18 +274,36 @@ object PyCompat {
     sb.toString
   }
 
-  /** Hex digest helpers (reference uses md5[:8] and sha1[:12] hex). */
-  def md5Hex(s: String): String = hex(digest("MD5", s))
-  def sha1Hex(s: String): String = hex(digest("SHA-1", s))
-  def sha256Hex(s: String): String = hex(digest("SHA-256", s))
+  /** Hex digest helpers (reference uses md5[:8] and sha1[:12] hex): UTF-8
+    * bytes, lowercase hex. The one digest-to-hex path of the engine — the
+    * curation md5 and the resume file ids use it too.
+    */
+  def md5Hex(s: String): String = md5Hex(utf8(s))
+  def md5Hex(bytes: Array[Byte]): String = hex(Md5.get().digest(bytes))
+  def sha1Hex(s: String): String = hex(Sha1.get().digest(utf8(s)))
+  def sha256Hex(s: String): String = hex(Sha256.get().digest(utf8(s)))
 
-  private def digest(algo: String, s: String): Array[Byte] =
-    java.security.MessageDigest.getInstance(algo)
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  // `digest` resets the instance, so one per thread is reused safely
+  private def perThread(algo: String) =
+    ThreadLocal.withInitial[java.security.MessageDigest](
+      () => java.security.MessageDigest.getInstance(algo))
+  private val Md5 = perThread("MD5")
+  private val Sha1 = perThread("SHA-1")
+  private val Sha256 = perThread("SHA-256")
+
+  private val HexDigits = "0123456789abcdef".toCharArray
 
   private def hex(bytes: Array[Byte]): String = {
-    val sb = new StringBuilder(bytes.length * 2)
-    bytes.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = HexDigits((bytes(i) >> 4) & 0xf)
+      out(2 * i + 1) = HexDigits(bytes(i) & 0xf)
+      i += 1
+    }
+    new String(out)
   }
 }

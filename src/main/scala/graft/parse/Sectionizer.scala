@@ -36,6 +36,10 @@ object Sectionizer {
     PyCompat.pySplitLit(fullText, "\n\n")
       .map(PyCompat.pyStrip).filter(_.nonEmpty)
       .zipWithIndex.map { case (p, i) =>
-        ChunkOut(p, f"${docId}_chunk_$i%03d", PyCompat.pyWordCount(p))
+        ChunkOut(p, docId + "_chunk_" + pad3(i), PyCompat.pyWordCount(p))
       }.toSeq
+
+  /** `%03d` of a non-negative index. */
+  private def pad3(i: Int): String =
+    if (i < 10) "00" + i else if (i < 100) "0" + i else i.toString
 }

@@ -122,4 +122,12 @@ class ShingleSpec extends AnyFunSuite {
       assert(native == want, s"pair expansion diverges: $native vs $want")
     }
   }
+
+  test("OrderedPairs rejects an array type that may hold nulls at analysis") {
+    import spark.implicits._
+    val d = Seq(Seq(Some(1L), None, Some(3L))).toDF("xs")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      d.select(TextShingles.orderedPairsCol(col("xs"))).queryExecution.assertAnalyzed())
+    assert(e.getMessage.contains("non-null elements"), e.getMessage)
+  }
 }

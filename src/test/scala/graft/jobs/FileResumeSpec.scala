@@ -292,20 +292,36 @@ class FileResumeSpec extends AnyFunSuite with ResumeUnit.PerUnit {
     val out = s"$base/out"
     assert(unit.run(spark, in, out) == 60L)
 
+    // nothing is pending: the restart decides that from the manifest and
+    // the driver-side listing alone
+    val jobs = jobsDuring(assert(unit.run(spark, in, out) == 0L))
+    assert(jobs == 0, s"no-op ${unit.col} restart launched $jobs Spark job(s)")
+  }
+
+  test("building the extract input read launches no Spark job") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft_fresume_read_").toString + "/docs"
+    spark.range(0, 20, 1, 2).map(i => CorpusGen.gen(i)).write.parquet(in)
+    // the declared input schema replaces parquet schema inference
+    val jobs = jobsDuring(ExtractJob.readDocs(spark, in))
+    assert(jobs == 0, s"building readDocs launched $jobs Spark job(s)")
+  }
+
+  /** Spark jobs started while `body` runs (earlier events drained first). */
+  private def jobsDuring(body: => Any): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
     val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc) // the first run's events land first
+    org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
-      // nothing is pending: the restart decides that from the manifest and
-      // the driver-side listing alone
-      assert(unit.run(spark, in, out) == 0L)
+      body
       org.apache.spark.ListenerBusDrain(sc)
-      assert(jobs.get == 0, s"no-op ${unit.col} restart launched ${jobs.get} Spark job(s)")
+      jobs.get
     } finally sc.removeSparkListener(listener)
   }
 
